@@ -2,12 +2,15 @@
 
 ``entry(spark)`` runs the flagship query on sf0.001;
 ``queries()``/``oracle_sql()`` expose every implemented operator from
-SURVEY.md §2 with its DuckDB oracle. Implementation lives in
-``php_etl_spark`` (this file only wires the contract).
+SURVEY.md §2 with its DuckDB oracle, in the order
+``php_etl_spark.driver_order`` derives from the driver's ledgers.
+Implementation lives in ``php_etl_spark`` (this file only wires the
+contract).
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
@@ -19,6 +22,7 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 from php_etl_spark.session import tune_session  # noqa: E402
+from php_etl_spark import driver_order  # noqa: E402
 from php_etl_spark import queries as Q  # noqa: E402
 
 
@@ -36,8 +40,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return run
 
-    return {name: _wrap(fn) for name, fn in Q.QUERIES.items()}
+    return {name: _wrap(Q.QUERIES[name]) for name in _order()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return dict(Q.ORACLES)
+    return {name: Q.ORACLES[name] for name in _order() if name in Q.ORACLES}
+
+
+@functools.cache
+def _order() -> list[str]:
+    return driver_order.order(Q.QUERIES, Q.ORACLES)

@@ -19,13 +19,12 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from php_etl_spark.functions.strings import dedup_key
 from php_etl_spark.materialize import materialize
 from php_etl_spark.operators.agg import first_wins_dedup
 from php_etl_spark.operators.project import compile_mapping, source_columns
 from php_etl_spark.plans.spec import PipelineSpec, TableSpec
 from php_etl_spark.sources.readers import read_source
-from php_etl_spark.sources.writers import append, overwrite, upsert, _sink_path
+from php_etl_spark.sources.writers import append, join_on_keys, overwrite, upsert, _sink_path
 
 
 @dataclass
@@ -207,17 +206,7 @@ def _run_table(
     dest_path = _sink_path(to_conn, table.destination)
     existing = _read_destination(spark, to_conn, table.destination)
     if table.unique and existing is not None:
-        norm = lambda c: dedup_key(c)  # noqa: E731
-        on = [
-            norm(F.col(k)).eqNullSafe(norm(F.col(f"__e_{k}"))) for k in table.unique
-        ]
-        ekeys = existing.select(
-            *[F.col(k).alias(f"__e_{k}") for k in table.unique]
-        ).dropDuplicates()
-        cond = on[0]
-        for c in on[1:]:
-            cond = cond & c
-        frame = frame.join(ekeys, on=cond, how="left_anti")
+        frame = join_on_keys(frame, existing, table.unique, "left_anti")
     frame = materialize(frame)
     # in-plan observation: the write job itself counts the rows — no
     # second action over the frame

@@ -24,6 +24,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from php_etl_spark.functions.strings import dedup_key
 from php_etl_spark.materialize import materialize
 
 
@@ -98,8 +99,22 @@ def merge_frames(
     unmatched existing rows survive, unmatched updates insert
     (/root/reference/sdk/migrate_assures.php:165-203). Updates must be
     unique per key (enforce upstream with first_wins_dedup)."""
-    survivors = existing.join(updates.select(*keys), on=list(keys), how="left_anti")
+    survivors = join_on_keys(existing, updates, keys, "left_anti")
     return survivors.unionByName(updates)
+
+
+def join_on_keys(
+    existing: DataFrame, other: DataFrame, keys: Sequence[str], how: str
+) -> DataFrame:
+    """Semi/anti join of ``existing`` against ``other``'s keys, matched
+    as pipeline dedup matches them: on ``dedup_key`` (strings trimmed,
+    numbers raw), NULL equal to NULL. Append, upsert and partition
+    scoping all match keys through here."""
+    probe = other.select(*[F.col(k).alias(f"__k_{k}") for k in keys])
+    cond = F.lit(True)
+    for k in keys:
+        cond = cond & dedup_key(k).eqNullSafe(dedup_key(f"__k_{k}"))
+    return existing.join(probe, on=cond, how=how)
 
 
 def refresh_frames(
@@ -171,9 +186,7 @@ def _touched_partitions(
     pcols = list(partition_by)
     from_updates = updates.select(*pcols).distinct()
     from_matched = (
-        existing.join(updates.select(*keys).distinct(), on=list(keys), how="left_semi")
-        .select(*pcols)
-        .distinct()
+        join_on_keys(existing, updates, keys, "left_semi").select(*pcols).distinct()
     )
     rows = from_updates.unionByName(from_matched).distinct().collect()
     return [tuple(r[c] for c in pcols) for r in rows]

@@ -278,6 +278,24 @@ def test_partition_scoped_upsert_key_moves_partition(spark, tmp_path):
     assert rows == [(1, "b", 11), (2, "b", 20)]
 
 
+@pytest.mark.parametrize("layout", ["plain", "partitioned", "versioned"])
+def test_upsert_matches_keys_like_pipeline_dedup(spark, tmp_path, layout):
+    """Upsert matches keys as in-run dedup and the append anti-join do
+    (dedup_key: strings trimmed), so a key that loses its padding
+    between runs replaces its row instead of gaining a second one."""
+    from php_etl_spark.sources.readers import read_source
+
+    conn = {"type": "parquet", "path": str(tmp_path)}
+    if layout == "versioned":
+        conn["layout"] = "versioned"
+    partition_by = ["part"] if layout == "partitioned" else None
+    for key, v in [("A1 ", "x"), ("A1", "y")]:
+        batch = spark.createDataFrame([(key, "p", v)], ["k", "part", "v"])
+        upsert(spark, batch, conn, "t", keys=["k"], partition_by=partition_by)
+    rows = [(r["k"], r["v"]) for r in read_source(spark, conn, "t").collect()]
+    assert rows == [("A1", "y")]
+
+
 def test_partition_scoped_delete_reinsert(spark, tmp_path):
     conn = {"type": "parquet", "path": str(tmp_path)}
     seed = spark.createDataFrame(
